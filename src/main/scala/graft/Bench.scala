@@ -21,6 +21,10 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   private val LineBudget = 1800
 
+  /** The full per-query artifact, read (prior round) and rewritten here;
+    * relative, so it lands in the working directory of the run. */
+  private val FullPath = "BENCH_FULL.json"
+
   /** Assemble the one-line JSON under the budget: fixed fields first, then
     * as many per-query entries as fit, never truncating mid-entry. Pure and
     * spec-pinned (BenchLineSpec) so the visible query set cannot silently
@@ -275,7 +279,7 @@ object Bench {
     // silently again.
     val priorMins: Map[String, Double] = try {
       val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/root/repo/BENCH_FULL.json")), "UTF-8")
+        java.nio.file.Paths.get(FullPath)), "UTF-8")
       "\"(q\\w+)\":\\[([0-9.]+)".r.findAllMatchIn(txt)
         .map(m => m.group(1) -> m.group(2).toDouble).toMap
     } catch { case _: Throwable => Map.empty }
@@ -381,10 +385,9 @@ object Bench {
       .mkString("""{"schema":"name:[min_sec,med_sec,attempts]","queries":{""",
         ",", s"""},"sf":"$sfDir","contended":$contended,"noisy_first":$noisyFirst""" +
           s""","drift_gt2":{$driftFull}}""")
-    val fullPath = "/root/repo/BENCH_FULL.json"
     val fullWritten =
       try { java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(fullPath), fullJson); true }
+        java.nio.file.Paths.get(FullPath), fullJson); true }
       catch { case _: Throwable => false }
     val fullField = if (fullWritten) s""","full":"BENCH_FULL.json"""" else ""
     // drifted NAMES go to stderr only (r17, VERDICT r16 #3): the in-line

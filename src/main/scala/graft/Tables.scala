@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.TemporaryViewRelation
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated TPC-H-ish parquet tables (see TESTDATA.md).
   *
@@ -55,82 +57,104 @@ object Tables {
     }
   }
 
-  /** Per-path parquet schema cache (r16 optimization, guide §1/§6): the
-    * fixture and generated-TPC-DS parquet under a given path are write-once
-    * for the life of a JVM, yet every operator invocation re-ran schema
-    * inference (footer read + listing) through `spark.read.parquet` —
-    * measured at ~1.5 s per TPC-DS query build (24 tables) and a steady tax
-    * on every registerAll-based SQL query. One inference per (JVM, path);
-    * reads then pass the schema explicitly. This is exactly the role a
-    * catalog/metastore plays in production — schemas come from metadata,
-    * not from re-opening data files per query. nanosAsLong must already be
-    * set by the caller for event-time tables so the cached schema matches
-    * the flagged read path. */
-  private val schemaCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.types.StructType]
+  /** Per-path parquet facts, read once per JVM: the schema Spark infers,
+    * and whether the file's footer declares a TIMESTAMP(NANOS) column.
+    * Spark 4 refuses such a column unless the session-global
+    * `spark.sql.legacy.parquet.nanosAsLong` is set, and the flag changes
+    * nothing else, so it is set only for a path whose footer really says
+    * NANOS — before its inference, and again for each later session that
+    * reads it (see [[cachedSchema]]). The inferred schema is therefore the
+    * same whatever the session had set, and the key is the path alone.
+    *
+    * Reads pass the schema explicitly instead of re-running inference (a
+    * footer read and listing per table per query — measured at ~1.5 s per
+    * TPC-DS query build): a catalog's role, schemas from metadata. The
+    * write-once contract of [[Memo]] applies: every caller passes a path
+    * that is not rewritten while the JVM runs (the testdata fixtures, the
+    * _SUCCESS-guarded TPC-DS root, atomically published replay dirs). */
+  private case class FileSchema(schema: StructType, nanos: Boolean)
+  private val schemas = new Memo[String, FileSchema]
 
-  /** CONTRACT (r17, ADVICE r16): the cache has no invalidation, so a path
-    * may only be passed here if its schema is WRITE-ONCE for the life of
-    * the JVM — true of every current caller (the testdata fixtures, the
-    * _SUCCESS-guarded TPC-DS root, atomically-published replay dirs). A
-    * caller that rewrites a path with a DIFFERENT schema in-process must
-    * not use this entry point (it would be served the stale schema); read
-    * the path directly instead. */
-  def cachedSchema(spark: SparkSession, path: String): org.apache.spark.sql.types.StructType = {
-    // nanosAsLong changes what inference returns for TIMESTAMP(NANOS)
-    // columns — key the cache on it so a flagged and an unflagged reader
-    // of the same file can never serve each other's schema
-    val key = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") + ":" + path
-    schemaCache.getOrElseUpdate(key, spark.read.parquet(path).schema)
+  def cachedSchema(spark: SparkSession, path: String): StructType = {
+    val f = schemas(path) {
+      val nanos = declaresNanos(spark, path)
+      if (nanos) readNanosAsLong(spark)
+      FileSchema(spark.read.parquet(path).schema, nanos)
+    }
+    if (f.nanos) readNanosAsLong(spark)
+    f.schema
   }
 
-  /** Per-(session, path) parquet RELATION cache (r17, guide §1/§6 — the
-    * second half of the r16 schema-cache finding): even with the schema
-    * supplied, every `spark.read.schema(...).parquet(path)` constructs a
-    * fresh DataSource relation — driver-side file listing + plan
-    * construction, measured at ~10-12 ms per table. TpcdsData.ensure
-    * rebuilds 24 of them for EVERY q_tpcdsr_* invocation (~0.3 s × 133
-    * queries ≈ 40 s per bench run) and Tables.apply/registerAll pays the
-    * same per fixture table. The logical plan of a scan over write-once
-    * parquet is immutable, so it is built once per (session, flag, path)
-    * and re-registered/reused from the memo; every action on it still
-    * reads the parquet — this caches METADATA (the relation), never data
-    * or results. Same write-once contract as [[cachedSchema]] above;
-    * DataFrames are session-bound, so the key leads with the session UUID. */
-  private val dfCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private def readNanosAsLong(spark: SparkSession): Unit =
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
-  /** identityHashCode is not unique across a session's lifetime and a later
-    * GC'd-then-reallocated object, so every cache hit is validated with an
-    * `eq` check on the frame's own session — a stale or colliding entry is
-    * rebuilt and replaced, never served. */
-  /** Measurement kill-switch (A/B aid, the GRAFT_STREAM_SHUFFLE precedent):
-    * GRAFT_NO_RELATION_MEMO=1 disables the relation memo AND the
-    * registration skips that depend on it, restoring the r16 per-call
-    * behavior in the same binary. */
-  val memoDisabled: Boolean = sys.env.contains("GRAFT_NO_RELATION_MEMO")
-
-  private def cachedFor(spark: SparkSession, key: String,
-                        build: () => DataFrame): DataFrame =
-    if (memoDisabled) build()
-    else dfCache.synchronized {
-      val k = System.identityHashCode(spark).toString + ":" + key
-      dfCache.get(k) match {
-        case Some(df) if df.sparkSession eq spark => df
-        case _ =>
-          val df = build()
-          dfCache.put(k, df)
-          df
-      }
+  /** Whether `path` (a file, or the first part file of a Spark-written
+    * directory) declares an INT64 TIMESTAMP(NANOS) column — the reference
+    * derives the runtime type from the footer the same way
+    * (flink-formats/flink-parquet/.../ParquetVectorizedInputFormat.java). */
+  private def declaresNanos(spark: SparkSession, path: String): Boolean = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.HadoopReadOptions
+    import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
+    import scala.jdk.CollectionConverters._
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    // a missing path is left to Spark's inference, which names it in its error
+    val file =
+      if (!fs.exists(p)) None
+      else if (!fs.getFileStatus(p).isDirectory) Some(p)
+      else fs.listStatus(p).map(_.getPath)
+        .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
+        .sortBy(_.getName).headOption
+    file.exists { f =>
+      // the schema only, with options over the already-loaded Hadoop conf:
+      // row-group metadata or a fresh Configuration costs ~10x the read
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf),
+        HadoopReadOptions.builder(conf).withMetadataFilter(SKIP_ROW_GROUPS).build())
+      try reader.getFooter.getFileMetaData.getSchema.getColumns.asScala.exists(c =>
+        c.getPrimitiveType.getLogicalTypeAnnotation match {
+          case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+          case _ => false
+        })
+      finally reader.close()
     }
+  }
+
+  /** THE event-time read boundary: every read of an event-time parquet file
+    * — the fixture `events` table, its file-stream source and sentinel,
+    * the out-of-order replay, event-time descriptors — gets its schema from
+    * [[cachedSchema]] (so the session reads NANOS as long exactly when the
+    * footer declares it) and leaves through [[normalizeTs]]. `read` builds
+    * the batch or stream reader from that schema. */
+  def readEventTime(spark: SparkSession, path: String, c: String = "ts")(
+      read: StructType => DataFrame): DataFrame =
+    normalizeTs(read(cachedSchema(spark, path)), c)
+
+  /** Per-(session, path) parquet RELATION memo: with the schema supplied,
+    * every `spark.read.schema(...).parquet(path)` still builds a fresh
+    * DataSource relation — driver-side listing + plan construction, ~10-12
+    * ms per table, which TpcdsData.ensure used to pay 24 times per
+    * q_tpcdsr_* query. The logical plan of a scan over write-once parquet is
+    * immutable, so it is built once per session; every action still reads
+    * the parquet — this caches metadata, never data or results. DataFrames
+    * are session-bound, so the session object leads the key; `normalized`
+    * tells the event-time frame from a raw one. */
+  private val relations = new Memo[(SparkSession, String, Boolean), DataFrame]
 
   /** Memoized `spark.read.schema(cachedSchema).parquet(path)` for
     * write-once paths (no event-time normalization — use [[apply]] for
     * fixture tables; this is the raw-relation entry TpcdsData uses). */
-  def cachedRead(spark: SparkSession, path: String): DataFrame = {
-    val flag = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
-    cachedFor(spark, flag + ":raw:" + path,
-      () => spark.read.schema(cachedSchema(spark, path)).parquet(path))
-  }
+  def cachedRead(spark: SparkSession, path: String): DataFrame =
+    relations((spark, path, false))(spark.read.schema(cachedSchema(spark, path)).parquet(path))
+
+  /** Size, as the optimizer estimates it, above which [[materializeShared]]
+    * persists to disk instead of checkpointing executor-locally. 4 GiB keeps
+    * every fixture-scale table on the measured localCheckpoint path. */
+  val LocalCheckpointMaxBytes: BigInt = BigInt(4L << 30)
 
   /** Materialize an intermediate that feeds several consumers (guide §2.4),
     * with a SCALE GATE (r17, VERDICT r16 what's-wrong #2): below the gate an
@@ -141,18 +165,15 @@ object Tables {
     * memory/disk, and with lineage gone one lost executor fails the query
     * instead of recomputing — so the large branch switches to
     * `persist(DISK_ONLY)` + eager materialization, whose blocks recompute
-    * from lineage on loss. Gated on the optimizer's size estimate;
-    * `GRAFT_LOCAL_CKPT_MAX_BYTES` overrides (local default 4 GiB keeps
-    * every bench/verify run on the measured localCheckpoint path).
+    * from lineage on loss. Gated on the optimizer's size estimate against
+    * [[LocalCheckpointMaxBytes]].
     * Unpersist on the gated path is the caller's (or the session cache
     * lifecycle's) concern — the bench clears the cache between queries. */
   def materializeShared(df: DataFrame): DataFrame = {
-    val gate = sys.env.get("GRAFT_LOCAL_CKPT_MAX_BYTES").map(BigInt(_))
-      .getOrElse(BigInt(4L << 30))
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est <= gate) df.localCheckpoint(eager = true)
+    if (est <= LocalCheckpointMaxBytes) df.localCheckpoint(eager = true)
     else {
-      System.err.println(s"[materialize] est=$est B > gate=$gate B: " +
+      System.err.println(s"[materialize] est=$est B > gate=$LocalCheckpointMaxBytes B: " +
         "persist(DISK_ONLY) instead of localCheckpoint")
       df.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
       df.count()
@@ -162,41 +183,34 @@ object Tables {
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    if (name == "events") {
-      // nanosAsLong only affects TIMESTAMP(NANOS) columns (micros files are
-      // untouched); setting it unconditionally keeps the nanos drop readable.
-      // Set BEFORE the (cached) inference so the cached schema reflects it.
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // memoize the NORMALIZED frame: normalizeTs re-analyzes a projection
-      // per call, and the flag is always set on this path, so the cached
-      // plan is identical to what every call would rebuild
-      cachedFor(spark, "true:norm:" + path,
-        () => normalizeTs(spark.read.schema(cachedSchema(spark, path)).parquet(path)))
-    } else cachedRead(spark, path)
+    // memoize the NORMALIZED events frame: normalizeTs re-analyzes a
+    // projection per call
+    if (name == "events")
+      relations((spark, path, true))(readEventTime(spark, path)(spark.read.schema(_).parquet(path)))
+    else cachedRead(spark, path)
   }
 
-  /** Register every table as a temp view so `spark.sql` matches the oracle.
-    *
-    * r17: same registration-skip discipline as TpcdsData.ensure — the view
-    * is re-registered UNLESS the catalog still holds the exact
-    * TemporaryViewRelation object this method stored last time (`eq` on
-    * getRawTempView). Any rebind by another family (TpcdsData.ensure
-    * rebinding `customer`, a DDL query, an explicit drop) stores a new
-    * object or clears the slot, fails the identity check, and forces the
-    * re-registration the old unconditional code always did; only the
-    * untouched steady state skips the ~5 ms/view rebuild. */
-  private val regMemo = scala.collection.concurrent.TrieMap.empty[String, AnyRef]
+  /** Registration skip, shared by [[registerAll]] and TpcdsData.ensure: the
+    * TemporaryViewRelation first stored for (view name, memoized relation)
+    * is itself memoized. A later call skips when the catalog still holds
+    * that exact object (`eq` on getRawTempView) and otherwise puts it back,
+    * so a rebind by another family (TpcdsData's `customer` over the TPC-H
+    * one, a DDL query, a drop) never leaves a stale binding, while the
+    * steady state costs a lookup instead of a ~5 ms view build. The
+    * relation is session-bound, so the view ledger is too. */
+  private val views = new Memo[(String, DataFrame), TemporaryViewRelation]
 
-  def registerAll(spark: SparkSession, dir: String): Unit = {
-    val cat = spark.sessionState.catalog
-    all.foreach { n =>
-      val key = System.identityHashCode(spark).toString + ":" + dir + ":" + n
-      val stillOurs = !memoDisabled && cat.getRawTempView(n).exists(cur =>
-        regMemo.get(key).exists(_ eq cur))
-      if (!stillOurs) {
-        apply(spark, dir, n).createOrReplaceTempView(n)
-        cat.getRawTempView(n).foreach(v => regMemo.put(key, v))
-      }
+  private[graft] def register(name: String, df: DataFrame): Unit = {
+    val cat = df.sparkSession.sessionState.catalog
+    val view = views((name, df)) {
+      df.createOrReplaceTempView(name)
+      cat.getRawTempView(name).get
     }
+    if (!cat.getRawTempView(name).exists(_ eq view))
+      cat.createTempView(name, view, overrideIfExists = true)
   }
+
+  /** Register every table as a temp view so `spark.sql` matches the oracle. */
+  def registerAll(spark: SparkSession, dir: String): Unit =
+    all.foreach(n => register(n, apply(spark, dir, n)))
 }

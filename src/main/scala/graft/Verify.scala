@@ -26,18 +26,24 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     // Local-iteration aid: GRAFT_ONLY=q1,q2 restricts the dump (driver never sets it).
     val only = sys.env.get("GRAFT_ONLY").map(_.split(",").toSet)
-    SparkEntry.queries
+    // one status line per query on stdout: `<name> ok` or `<name> <exception class>`
+    val failed = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      .flatMap { case (name, fn) =>
+        val failure =
+          try {
+            fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+            None
+          } catch { case e: Throwable =>
+            System.err.println(s"[verify] $name failed: ${e.getMessage}")
+            Some(e)
+          }
+        println(s"$name ${failure.fold("ok")(_.getClass.getName)}")
+        // drop partitions cached inside operators so 100+ queries in one
+        // session don't accumulate memory pressure
+        spark.catalog.clearCache()
+        failure.map(_ => name)
       }
-      // drop partitions cached inside operators so 100+ queries in one
-      // session don't accumulate memory pressure
-      spark.catalog.clearCache()
-    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -54,5 +60,9 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} queries failed: ${failed.mkString(",")}")
+      sys.exit(1)
+    }
   }
 }

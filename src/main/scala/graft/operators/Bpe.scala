@@ -85,8 +85,7 @@ object Bpe {
     (merges.result(), v)
   }
 
-  private val shared =
-    new java.util.concurrent.ConcurrentHashMap[String, (Seq[(Int, String, String, Long)], String)]()
+  private val shared = new graft.Memo[String, (Seq[(Int, String, String, Long)], String)]
 
   /** Session-scoped trained-tokenizer cache (the ngramJaccardPairsShared
     * convention): q_bpe_merges and q_bpe_encode consume ONE training run —
@@ -96,14 +95,14 @@ object Bpe {
     * keying keeps a fresh session paying the one genuine training. */
   private def trained(s: SparkSession, dir: String): (Seq[(Int, String, String, Long)], DataFrame) = {
     val key = s.sparkContext.applicationId + "|" + dir
-    val (merges, path) = shared.computeIfAbsent(key, _ => {
+    val (merges, path) = shared(key) {
       val p = "/tmp/graft-shared/bpe-vocab-" + s.sparkContext.applicationId +
         "-" + dir.replaceAll("[^A-Za-z0-9.]", "_") +
         "-" + java.lang.Integer.toHexString(dir.hashCode)
       val (m, v) = train(s, dir)
       v.write.mode("overwrite").parquet(p)
       (m, p)
-    })
+    }
     (merges, s.read.parquet(path))
   }
 

@@ -270,8 +270,7 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  private val sharedPairs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val sharedPairs = new graft.Memo[String, String]
 
   /** The near-dup pair table, materialized ONCE per (Spark app, corpus dir)
     * and shared by every consumer (keep-list, graph queries, clean-corpus
@@ -285,7 +284,7 @@ object Dedup {
     * persist to the lake anyway. */
   def ngramJaccardPairsShared(s: SparkSession, dir: String): DataFrame = {
     val key = s.sparkContext.applicationId + "|" + dir
-    val path = sharedPairs.computeIfAbsent(key, _ => {
+    val path = sharedPairs(key) {
       // hashCode suffix keeps distinct dirs collision-free after the
       // readable-name sanitization (/a/b vs /a_b would otherwise collide)
       val p = "/tmp/graft-shared/ngram-pairs-" + s.sparkContext.applicationId +
@@ -301,7 +300,7 @@ object Dedup {
       // baseline). Measured: shared build 8.8 s → ~2.6 s at sf0.1.
       ppjoinPairs(s, dir).write.mode("overwrite").parquet(p)
       p
-    })
+    }
     s.read.parquet(path)
   }
 

@@ -27,13 +27,14 @@ case class TableDescriptor(name: String, path: String,
 
 object Descriptors {
 
+  /** `tsNanosAsLong` means "this column is event time": such a table is
+    * read through the event-time boundary, which handles both the NANOS
+    * and the timestamp[us] encodings. */
   private def load(s: SparkSession, d: TableDescriptor): DataFrame = {
-    val base = if (d.tsNanosAsLong) {
-      // schema-adaptive: the option means "this column is event time —
-      // normalize it", covering both nanos-as-long and timestamp[us] drops
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      graft.Tables.normalizeTs(s.read.parquet(d.path), d.watermarkCol.getOrElse("ts"))
-    } else s.read.parquet(d.path)
+    val base =
+      if (d.tsNanosAsLong) graft.Tables.readEventTime(s, d.path, d.watermarkCol.getOrElse("ts"))(
+        s.read.schema(_).parquet(d.path))
+      else s.read.parquet(d.path)
     withComputed(base, d)
   }
 
@@ -51,18 +52,18 @@ object Descriptors {
 
   /** Unbounded stream with the declared watermark applied from metadata. */
   def stream(s: SparkSession, d: TableDescriptor): DataFrame = {
-    if (d.tsNanosAsLong) s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = graft.Tables.cachedSchema(s, d.path)
     // the file-stream source wants a DIRECTORY; a descriptor pointing at
     // one file becomes parent dir + exact-name glob
     val f = new java.io.File(d.path)
-    val reader = s.readStream.schema(schema)
-    val raw = if (f.isFile) reader.option("pathGlobFilter", f.getName).parquet(f.getParent)
-              else reader.parquet(d.path)
-    val withTime = if (d.tsNanosAsLong)
-      graft.Tables.normalizeTs(raw, d.watermarkCol.getOrElse("ts"))
-    else raw
-    val full = withComputed(withTime, d)
+    def read(schema: org.apache.spark.sql.types.StructType): DataFrame = {
+      val reader = s.readStream.schema(schema)
+      if (f.isFile) reader.option("pathGlobFilter", f.getName).parquet(f.getParent)
+      else reader.parquet(d.path)
+    }
+    val raw =
+      if (d.tsNanosAsLong) graft.Tables.readEventTime(s, d.path, d.watermarkCol.getOrElse("ts"))(read)
+      else read(graft.Tables.cachedSchema(s, d.path))
+    val full = withComputed(raw, d)
     d.watermarkCol.fold(full)(c => full.withWatermark(c, d.watermarkDelay))
   }
 

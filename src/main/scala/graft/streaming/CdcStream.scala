@@ -37,8 +37,7 @@ object CdcStream {
 
     @volatile var current: Option[String] = None
     val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("GRAFT_STREAM_SHUFFLE", "4"))
+    s.conf.set("spark.sql.shuffle.partitions", StreamSource.ShufflePartitions.toString)
     try {
       val q = changelog.writeStream
         .outputMode("append")

@@ -41,12 +41,12 @@ object OooReplay {
   val Blocks = 8
 
   private case class Prepared(dir: String, delaySec: Long)
-  private val cache = scala.collection.concurrent.TrieMap.empty[String, Prepared]
+  private val prepared = new graft.Memo[String, Prepared]
 
   /** Build (once per events dir, cross-process reusable) the segmented
     * replay; returns (replayDir, watermarkDelaySeconds). */
   def prepare(s: SparkSession, dir: String): (String, Long) = {
-    val p = cache.getOrElseUpdate(dir, doPrepare(s, dir))
+    val p = prepared(dir)(doPrepare(s, dir))
     (p.dir, p.delaySec)
   }
 
@@ -60,7 +60,7 @@ object OooReplay {
     * sorter after every real row; matches no operator predicate). */
   val FlushType = "__flush"
 
-  private def doPrepare(s: SparkSession, dir: String): Prepared = synchronized {
+  private def doPrepare(s: SparkSession, dir: String): Prepared = {
     val replayDir =
       s"/tmp/graft-ooo/v$ReplayVersion-" + dir.replaceAll("[^A-Za-z0-9.]", "_")
     val root = new java.io.File(replayDir)
@@ -69,15 +69,10 @@ object OooReplay {
       val d = new String(java.nio.file.Files.readAllBytes(meta.toPath)).trim.toLong
       return Prepared(replayDir, d)
     }
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // canonicalize ts to long MICROS whatever the file declared (nanos-as-long
-    // or timestamp[us]/_NTZ — the generator has shipped both): all block/
-    // lateness arithmetic below, and the segment files themselves, use micros
-    val raw0 = s.read.parquet(s"$dir/events.parquet")
-    val raw = raw0.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType => raw0.withColumn("ts", expr("ts div 1000"))
-      case _ => raw0.withColumn("ts", expr("unix_micros(cast(ts as timestamp))"))
-    }
+    // ts as long MICROS whatever the file declared (the event-time boundary
+    // behind graft.Tables normalizes it first): all block/lateness
+    // arithmetic below, and the segment files themselves, use micros
+    val raw = graft.Tables(s, dir, "events").withColumn("ts", expr("unix_micros(ts)"))
     val schema = raw.schema
     val n = raw.count()
     val per = math.max(1L, (n + Blocks - 1) / Blocks)

@@ -46,13 +46,13 @@ object StateBootstrap {
     * region (r16 optimization, guide §1; the sentinel-memo precedent).
     * In-process only: a fresh JVM always rebuilds from the parquet inputs,
     * so a stale fixture can never cross testdata drops. */
-  private val prepMemo = scala.collection.concurrent.TrieMap.empty[String, Any]
-  // synchronized (r17, the CdcFormats.roundTrip discipline): the builders
-  // write fixture dirs and (surgery/rescale) temporarily flip the session's
-  // shuffle.partitions — two concurrent first-callers must not interleave
-  // those side effects (callers are sequential today; cheap insurance)
+  private val prepMemo = new graft.Memo[String, Any]
+  // The memo builds each key once, but builds of DIFFERENT keys may run
+  // together, and surgery/rescale flip the session-global
+  // spark.sql.shuffle.partitions while they build: the lock keeps two
+  // builders from interleaving that flip. Hits never take it.
   private def prepOnce[T](key: String)(build: => T): T =
-    synchronized(prepMemo.getOrElseUpdate(key, build)).asInstanceOf[T]
+    prepMemo(key)(synchronized(build)).asInstanceOf[T]
 
   /** The keyed continuation fold: live rows (flush markers excluded) are
     * folded onto whatever accumulator the state holds — the batch-seeded

@@ -41,8 +41,7 @@ object StreamBloom {
     val ckpt = s"${StreamSource.ckptRoot}/bloom-${System.nanoTime()}"
     val name = s"stream_bloom_${System.nanoTime()}"
     val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("GRAFT_STREAM_SHUFFLE", "4"))
+    s.conf.set("spark.sql.shuffle.partitions", StreamSource.ShufflePartitions.toString)
     try {
       val q = words.writeStream.format("memory").queryName(name)
         .outputMode("update").option("checkpointLocation", ckpt).start()

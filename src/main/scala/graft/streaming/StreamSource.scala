@@ -33,17 +33,11 @@ object StreamSource {
 
   /** events as an unbounded DataFrame via the parquet file-stream source. */
   def events(s: SparkSession, dir: String): DataFrame = {
-    // file source needs an explicit schema: take it from the batch reader
-    // (cached per JVM+path — r16, the Tables.cachedSchema discipline), then
-    // normalize ts the same schema-adaptive way as graft.Tables
-    // (the generator has shipped both nanos-as-long and micros drops)
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = graft.Tables.cachedSchema(s, s"$dir/events.parquet")
+    // the file source needs an explicit schema: the event-time boundary
+    // supplies the cached one and normalizes ts
     val (path, glob) = eventsStreamPath(dir)
-    graft.Tables.normalizeTs(
-      s.readStream.schema(schema)
-        .option("pathGlobFilter", glob)
-        .parquet(path))
+    Tables.readEventTime(s, s"$dir/events.parquet")(
+      s.readStream.schema(_).option("pathGlobFilter", glob).parquet(path))
   }
 
   def eventsTyped(s: SparkSession, dir: String): Dataset[Event] = {
@@ -60,35 +54,27 @@ object StreamSource {
     * retains state forever. Callers filter the sentinel key back out
     * (`event_type = '__sentinel'`, `user_id = -1`). */
   /** Per-JVM memo of the written sentinel fixture: (events dir) →
-    * (events schema, sentinel parquet dir). r16 optimization (guide §1):
+    * sentinel parquet dir. r16 optimization (guide §1):
     * every sentinel-based streaming query re-ran the max(ts) scan AND
     * rewrote the one-row sentinel parquet before its stream even started —
     * a fixture-prep job inside the timed run. The events fixture is
     * immutable for the life of a JVM, so both are computed once; the memo
     * is in-process only (no cross-process reuse — a stale sentinel from an
     * older testdata drop can never leak into a new run). */
-  private val sentinelMemo = scala.collection.concurrent.TrieMap
-    .empty[String, (org.apache.spark.sql.types.StructType, String)]
+  private val sentinels = new graft.Memo[String, String]
 
   def eventsWithSentinel(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // synchronized (r17, the CdcFormats.roundTrip discipline): two
-    // concurrent first-callers must not both run prepareSentinel and
-    // overwrite the same fixed sentinel dir mid-read — callers are
-    // sequential today; cheap insurance
-    val (schema, sentinelDir) = synchronized(
-      sentinelMemo.getOrElseUpdate(dir, prepareSentinel(s, dir)))
+    val sentinelDir = sentinels(dir)(prepareSentinel(s, dir))
     val (path, glob) = eventsStreamPath(dir)
-    val real = s.readStream.schema(schema)
-      .option("pathGlobFilter", glob).parquet(path)
-    val sentinel = s.readStream.schema(schema).parquet(sentinelDir)
-    graft.Tables.normalizeTs(real.union(sentinel))
+    Tables.readEventTime(s, s"$dir/events.parquet") { schema =>
+      s.readStream.schema(schema).option("pathGlobFilter", glob).parquet(path)
+        .union(s.readStream.schema(schema).parquet(sentinelDir))
+    }
   }
 
-  private def prepareSentinel(s: SparkSession, dir: String):
-      (org.apache.spark.sql.types.StructType, String) = {
-    val raw = s.read.parquet(s"$dir/events.parquet")
-    val schema = raw.schema
+  private def prepareSentinel(s: SparkSession, dir: String): String = {
+    val schema = Tables.cachedSchema(s, s"$dir/events.parquet")
+    val raw = s.read.schema(schema).parquet(s"$dir/events.parquet")
     import org.apache.spark.sql.functions.max
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
     // sentinel ts = max(ts) + 30 days, expressed in the file's own ts type so
@@ -121,7 +107,7 @@ object StreamSource {
     val sentinelDir = s"/tmp/graft-sentinel/${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
     s.createDataFrame(java.util.Arrays.asList(org.apache.spark.sql.Row(values: _*)), schema)
       .coalesce(1).write.mode("overwrite").parquet(sentinelDir)
-    (schema, sentinelDir)
+    sentinelDir
   }
 
   /** Typed sentinel stream with a 1-hour watermark: stateful operators
@@ -178,6 +164,14 @@ object StreamSource {
     if (shm.isDirectory && shm.canWrite) "/dev/shm/graft-ckpt" else "/tmp/graft-ckpt"
   }
 
+  /** Shuffle fan-out of every bounded streaming replay. Measured at sf0.1,
+    * the replay-driven queries spend their time in per-partition
+    * state-store lifecycle (snapshot + fsync per stateful op per batch), so
+    * 4 (was 8) cuts ~10-13% off every streaming query
+    * (q_stream_dyn_session_ooo 7.12->6.22 s warm, q_stream_tumble
+    * 2.21->2.01 s); 2 partitions re-serializes the work and loses the gain. */
+  val ShufflePartitions = 4
+
   def runToTable(s: SparkSession, df: DataFrame, name: String,
                  mode: String, afterStart: () => Unit = () => (),
                  // runs after the drain, before stop — the hook that lets
@@ -185,14 +179,7 @@ object StreamSource {
                  // row counts for the TTL-bound demonstrations)
                  onDrained: StreamingQuery => Unit = _ => ()): DataFrame = {
     val prev = s.conf.get("spark.sql.shuffle.partitions")
-    // default 4 (was 8): measured at sf0.1, the replay-driven queries spend
-    // their time in per-partition state-store lifecycle (snapshot + fsync
-    // per stateful op per batch), so halving the fan-out cuts ~10-13% off
-    // every streaming query (q_stream_dyn_session_ooo 7.12->6.22 s warm,
-    // q_stream_tumble 2.21->2.01 s); 2 partitions re-serializes the work
-    // and loses the gain. GRAFT_STREAM_SHUFFLE overrides for experiments.
-    s.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("GRAFT_STREAM_SHUFFLE", "4"))
+    s.conf.set("spark.sql.shuffle.partitions", ShufflePartitions.toString)
     try {
       val q: StreamingQuery =
         try df.writeStream
@@ -202,13 +189,6 @@ object StreamSource {
           .start()
         finally afterStart()
       q.processAllAvailable()
-      // GRAFT_STREAM_PROGRESS=1: per-batch duration breakdown on stderr
-      // (optimization-round measurement aid; off in normal runs)
-      if (sys.env.contains("GRAFT_STREAM_PROGRESS"))
-        q.recentProgress.foreach { p =>
-          System.err.println(s"[stream-prof] $name batch=${p.batchId} " +
-            s"rows=${p.numInputRows} durationMs=${p.durationMs}")
-        }
       onDrained(q)
       q.stop()
     } finally s.conf.set("spark.sql.shuffle.partitions", prev)

@@ -798,10 +798,9 @@ object TpcdsData {
     * ~150 s across the 103-query family per bench run. The parquet under
     * `root` is write-once (the _SUCCESS marker), so the inferred schemas
     * are cached per path in [[graft.Tables.cachedSchema]] and registration
-    * reads with an explicit schema. Views are still re-registered on every
-    * call: other query paths rebind shared names (`customer` is also a
-    * TPC-H fixture view via Tables.registerAll), so skipping registration
-    * outright would read another family's table after an interleaved run. */
+    * reads with an explicit schema. Other query paths rebind shared names
+    * (`customer` is also a TPC-H fixture view via Tables.registerAll), so
+    * every call re-checks each view's binding. */
   def ensure(s: SparkSession, sfDir: String): String = synchronized {
     val root = rootFor(sfDir)
     val scale = scaleOf(sfDir)
@@ -813,35 +812,12 @@ object TpcdsData {
       marker.getParentFile.mkdirs()
       java.nio.file.Files.writeString(marker.toPath, "ok")
     }
-    // r17: the relation is memoized per (session, path) in Tables (the
-    // parquet under root is write-once, ~10 ms relation build × 24 × every
-    // invocation), and registration is skipped ONLY when the catalog still
-    // holds the exact TemporaryViewRelation object this code stored last
-    // time (`eq` on getRawTempView). Any rebind by another family —
-    // Tables.registerAll rebinding `customer`, a DDL query, anything —
-    // stores a NEW object, the identity check fails, and the view is
-    // re-registered: the r16 stale-binding hazard cannot recur, while the
-    // steady-state cost collapses from 24 view builds (~0.3 s) to 24 map
-    // lookups.
-    val cat = s.sessionState.catalog
-    tableNames.foreach { t =>
-      val key = System.identityHashCode(s).toString + ":" + root + ":" + t
-      val stillOurs = !graft.Tables.memoDisabled &&
-        cat.getRawTempView(t).exists(cur => regMemo.get(key).exists(_ eq cur))
-      if (!stillOurs) {
-        graft.Tables.cachedRead(s, s"$root/$t").createOrReplaceTempView(t)
-        cat.getRawTempView(t).foreach(v => regMemo.put(key, v))
-      }
-    }
+    // relations memoized per (session, path) and registration skipped while
+    // the catalog still holds the view stored last time (Tables.register):
+    // the steady state is 24 lookups instead of 24 view builds (~0.3 s)
+    tableNames.foreach(t => graft.Tables.register(t, graft.Tables.cachedRead(s, s"$root/$t")))
     root
   }
-
-  /** Per-(session, root, table) ledger of the TemporaryViewRelation object
-    * ensure() last stored — the identity token for the skip above. A session
-    * identityHashCode collision (GC'd session reallocated at the same hash)
-    * cannot satisfy the `eq` check against a different catalog's stored
-    * object, so a stale entry only ever forces a harmless re-registration. */
-  private val regMemo = scala.collection.concurrent.TrieMap.empty[String, AnyRef]
 
   /** DuckDB oracle prelude: CTEs binding each referenced table to the
     * parquet the generator wrote (correctness scale path — static because

@@ -23,25 +23,24 @@ class StreamingOooSpec extends SparkSpec {
     val segs = new java.io.File(replayDir).listFiles()
       .filter(_.getName.matches("seg-\\d+\\.parquet")).sortBy(_.getName)
     assert(segs.length >= OooReplay.Blocks, "replay must be multi-segment")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val stats = segs.dropRight(1).map { f => // last segment = sentinel
       val r = spark.read.parquet(f.getPath).agg(min("ts"), max("ts")).head
       (r.getLong(0), r.getLong(1))
     }
     var runMax = Long.MinValue
     var inversions = 0
-    var worstLateNanos = 0L
+    var worstLateMicros = 0L
     stats.foreach { case (mn, mx) =>
       if (runMax != Long.MinValue && mn < runMax) {
         inversions += 1
-        worstLateNanos = math.max(worstLateNanos, runMax - mn)
+        worstLateMicros = math.max(worstLateMicros, runMax - mn)
       }
       runMax = math.max(runMax, mx)
     }
     assert(inversions >= OooReplay.Blocks / 2 - 1,
       s"expected pair-swap inversions, got $inversions")
-    assert(worstLateNanos > 0, "fixture must contain genuinely late rows")
-    assert(worstLateNanos <= delaySec * 1000000000L,
+    assert(worstLateMicros > 0, "fixture must contain genuinely late rows")
+    assert(worstLateMicros <= delaySec * 1000000L,
       "advertised watermark delay must cover the manufactured disorder")
   }
 
