@@ -11,7 +11,12 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
   *  - `file:` / schemeless paths take a java.nio/java.io fast path —
   *    measured 700x faster per rename than Hadoop's local FileContext
   *    (24 ms vs 35 µs), which would otherwise dominate a 200-file epoch
-  *    publish;
+  *    publish. The cost is shell forks: without libhadoop, stock
+  *    RawLocalFileSystem runs `readlink` four times per rename and `chmod`
+  *    per created file. `graft.LocalFs` removes them for streaming
+  *    checkpoints; this module keeps its own nio branch because
+  *    `renameIfAbsent` relies on link(2) and it reads a private
+  *    `Configuration` that the shim is not bound in;
   *  - any other scheme (hdfs://, s3a://, …) routes through Hadoop
   *    FileSystem / FileContext: namenode-atomic renames on HDFS, and on
   *    object stores without atomic rename the rolling sink's MANIFEST

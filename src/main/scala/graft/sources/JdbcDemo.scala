@@ -120,7 +120,7 @@ object JdbcDemo {
     val q = events.writeStream
       .outputMode("append")
       .option("checkpointLocation",
-        s"${graft.streaming.StreamSource.ckptRoot}/jdbc-${s.sparkContext.applicationId}-${System.nanoTime()}")
+        graft.streaming.StreamSource.checkpointDir(s, s"jdbc-${s.sparkContext.applicationId}"))
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // reduce the epoch to one action per key FIRST (map-side combine),
         // then flush batched MERGEs from each partition's own connection

@@ -28,16 +28,11 @@ import org.apache.spark.sql.functions._
   */
 object StateRead {
 
-  // tmpfs-backed when available (see StreamSource.ckptRoot) — the state
-  // store is re-read in-process right after the run, never across exits
-  private def ckptDir(name: String): String =
-    s"${graft.streaming.StreamSource.ckptRoot}-stateread/$name-${System.nanoTime()}"
-
   /** q_state_agg_read: the final aggregation state of a streaming
     * groupBy(user_id).agg(count,sum) — one (count,sum) buffer row per key,
     * exactly the RocksDB contents SavepointReader.aggregate() would yield. */
   def aggStateRead(s: SparkSession, dir: String): DataFrame = {
-    val ckpt = ckptDir("agg")
+    val ckpt = graft.streaming.StreamSource.checkpointDir(s, "stateread-agg")
     val agg = graft.streaming.StreamSource.eventsWithSentinel(s, dir)
       .groupBy("user_id")
       .agg(count(lit(1)).as("cnt"), sum("value").as("sum_value"))
@@ -56,7 +51,7 @@ object StateRead {
   /** q_state_dedup_read: the key set of a streaming dropDuplicates state —
     * the seen-keys store, aggregated per user. */
   def dedupStateRead(s: SparkSession, dir: String): DataFrame = {
-    val ckpt = ckptDir("dedup")
+    val ckpt = graft.streaming.StreamSource.checkpointDir(s, "stateread-dedup")
     val dd = graft.streaming.StreamSource.eventsWithSentinel(s, dir)
       .select("user_id", "event_type")
       .dropDuplicates("user_id", "event_type")

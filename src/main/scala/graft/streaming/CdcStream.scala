@@ -41,8 +41,7 @@ object CdcStream {
     try {
       val q = changelog.writeStream
         .outputMode("append")
-        .option("checkpointLocation",
-          s"${StreamSource.ckptRoot}/cdc-${System.nanoTime()}")
+        .option("checkpointLocation", StreamSource.checkpointDir(s, "cdc"))
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           val sess = batch.sparkSession
           // net action per key within the batch: the max-offset event

@@ -154,7 +154,7 @@ object StateBootstrap {
       // INPUT artifact; see prepMemo)
       val histDir = s"$base/hist"
       ev.where(cc).coalesce(1).write.mode("overwrite").parquet(histDir)
-      val ck = s"${StreamSource.ckptRoot}/surgery-${System.nanoTime()}"
+      val ck = StreamSource.checkpointDir(s, "surgery")
       val hist = s.readStream.schema(ev.schema).parquet(histDir)
         .select("event_id", "ts", "user_id", "event_type", "value").as[Event]
       val folded = hist.groupByKey(_.user_id)
@@ -239,7 +239,7 @@ object StateBootstrap {
       // into the savepoint the rescale takes as INPUT (see prepMemo)
       val histDir = s"$base/hist"
       ev.where(cc).coalesce(1).write.mode("overwrite").parquet(histDir)
-      val ck = s"${StreamSource.ckptRoot}/rescale$pOld-${System.nanoTime()}"
+      val ck = StreamSource.checkpointDir(s, s"rescale$pOld")
       s.conf.set(partKey, pOld.toString)
       try {
         val hist = s.readStream.schema(ev.schema).parquet(histDir)
@@ -276,7 +276,7 @@ object StateBootstrap {
     // phase 3: the new job at parallelism pNew, seeded, streaming the
     // prepared live half (flush markers included so bootstrap-only keys
     // still report)
-    val ckptB = s"${StreamSource.ckptRoot}/rescale$pNew-${System.nanoTime()}"
+    val ckptB = StreamSource.checkpointDir(s, s"rescale$pNew")
     val name = s"state_rescale_${System.nanoTime()}"
     s.conf.set(partKey, pNew.toString)
     try {

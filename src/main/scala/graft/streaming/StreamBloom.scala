@@ -38,7 +38,7 @@ object StreamBloom {
       .select(col("doc_id"), col("fp"))
     val words = Dedup.bloomWordBits(Dedup.bloomLake(base))
       .groupBy("w").agg(expr("bit_or(m)").as("bits"))
-    val ckpt = s"${StreamSource.ckptRoot}/bloom-${System.nanoTime()}"
+    val ckpt = StreamSource.checkpointDir(s, "bloom")
     val name = s"stream_bloom_${System.nanoTime()}"
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", StreamSource.ShufflePartitions.toString)

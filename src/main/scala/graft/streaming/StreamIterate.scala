@@ -43,8 +43,7 @@ object StreamIterate {
       .select(col("id"), (col("steps_left") - 1).as("steps_left"),
         (col("steps_done") + 1).as("steps_done"))
     val q = stepped.writeStream
-      .option("checkpointLocation",
-        s"${StreamSource.ckptRoot}/iterate-${System.nanoTime()}")
+      .option("checkpointLocation", StreamSource.checkpointDir(s, "iterate"))
       .foreachBatch { (b: DataFrame, _: Long) =>
         val batch = b.persist()
         try {

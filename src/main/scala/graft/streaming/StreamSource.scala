@@ -156,12 +156,21 @@ object StreamSource {
     * cluster the checkpoint store is remote (HDFS/object store) with its
     * own commit path; on this single-JVM host, per-batch fsyncs of tiny
     * state/offset files onto ext4 are pure fixture overhead taxing every
-    * bounded replay. Crash durability is separately proven by
-    * CheckpointRecoverySpec (own paths); nothing here reads a checkpoint
-    * after process exit. */
+    * bounded replay. Restart from a checkpoint is proven by
+    * CheckpointRecoverySpec (a second query reads the first one's offsets
+    * and state back); nothing here reads a checkpoint after process exit. */
   val ckptRoot: String = {
     val shm = new java.io.File("/dev/shm")
     if (shm.isDirectory && shm.canWrite) "/dev/shm/graft-ckpt" else "/tmp/graft-ckpt"
+  }
+
+  /** A fresh checkpoint location under [[ckptRoot]], named `<tag>-<nanos>`.
+    * Every streaming query takes its checkpoint from here: it first binds
+    * the session's `file:` FileContexts to [[graft.LocalFs]], so the query
+    * writes its checkpoint without a shell fork per file. */
+  def checkpointDir(s: SparkSession, tag: String): String = {
+    graft.LocalFs.install(s)
+    s"$ckptRoot/$tag-${System.nanoTime()}"
   }
 
   /** Shuffle fan-out of every bounded streaming replay. Measured at sf0.1,
@@ -184,8 +193,7 @@ object StreamSource {
       val q: StreamingQuery =
         try df.writeStream
           .format("memory").queryName(name).outputMode(mode)
-          .option("checkpointLocation",
-            s"$ckptRoot/$name-${System.nanoTime()}")
+          .option("checkpointLocation", checkpointDir(s, name))
           .start()
         finally afterStart()
       q.processAllAvailable()

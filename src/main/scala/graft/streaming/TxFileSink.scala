@@ -333,8 +333,7 @@ object TxFileSink {
       .writeStream
       // engine state on the tmpfs ckpt root; the sink's own 2PC manifests
       // (the demonstrated contract) stay under `out`
-      .option("checkpointLocation",
-        s"${StreamSource.ckptRoot}/2pc-${System.nanoTime()}")
+      .option("checkpointLocation", StreamSource.checkpointDir(s, "2pc"))
       .foreachBatch { (b: DataFrame, id: Long) => commitEpoch(b, id, out) }
       .start()
     try { q.processAllAvailable() } finally q.stop()
@@ -362,8 +361,7 @@ object TxFileSink {
       .select(col("key"), col("value"),
         split(col("value"), "\\|").getItem(1).as("day"))
       .writeStream
-      .option("checkpointLocation",
-        s"${StreamSource.ckptRoot}/rolling-${System.nanoTime()}")
+      .option("checkpointLocation", StreamSource.checkpointDir(s, "rolling"))
       .foreachBatch { (b: DataFrame, id: Long) =>
         rollingEpoch(b, id, out, "day", "value", maxRowsPerFile = rollRows)
       }

@@ -30,7 +30,7 @@ object UpsertSink {
     @volatile var current: Option[String] = None
     val q = changelog.writeStream
       .outputMode("append")
-      .option("checkpointLocation", s"${StreamSource.ckptRoot}/$name-${System.nanoTime()}")
+      .option("checkpointLocation", StreamSource.checkpointDir(s, name))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val sess = batch.sparkSession
         val seqCol = if (batch.columns.contains("seq")) col("seq") else lit(0L)

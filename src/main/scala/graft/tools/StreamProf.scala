@@ -35,7 +35,7 @@ object StreamProf {
     val q = time("start+drain") {
       val q = agg.writeStream.format("memory").queryName("prof")
         .outputMode("complete")
-        .option("checkpointLocation", s"/tmp/graft-ckpt/prof-${System.nanoTime()}")
+        .option("checkpointLocation", StreamSource.checkpointDir(spark, "prof"))
         .start()
       q.processAllAvailable(); q
     }

@@ -24,7 +24,7 @@ class CheckpointRecoverySpec extends SparkSpec {
 
   test("runningAgg state, offsets and file-sink commits survive restart") {
     implicit val sqlCtx = spark.sqlContext
-    val base = s"/tmp/graft-ckpt/test-recovery-${System.nanoTime()}"
+    val base = graft.streaming.StreamSource.checkpointDir(spark, "test-recovery")
     val input = MemoryStream[Event]
 
     def start() =
@@ -57,7 +57,7 @@ class CheckpointRecoverySpec extends SparkSpec {
 
   test("keepLast dedup state survives restart via foreachBatch (stale row still rejected)") {
     implicit val sqlCtx = spark.sqlContext
-    val ckpt = s"/tmp/graft-ckpt/test-recovery2-${System.nanoTime()}"
+    val ckpt = graft.streaming.StreamSource.checkpointDir(spark, "test-recovery2")
     val input = MemoryStream[Event]
 
     def start() =

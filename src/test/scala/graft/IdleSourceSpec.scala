@@ -42,7 +42,7 @@ class IdleSourceSpec extends SparkSpec {
       val q = agg.writeStream.format("memory").queryName(name)
         .outputMode("append")
         .option("checkpointLocation",
-          s"${graft.streaming.StreamSource.ckptRoot}/idle-${System.nanoTime()}")
+          graft.streaming.StreamSource.checkpointDir(spark, "idle"))
         .start()
       try {
         idle.addData(5L) // one early row, then silence forever

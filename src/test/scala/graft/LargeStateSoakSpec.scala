@@ -348,7 +348,7 @@ class LargeStateSoakSpec extends SparkSpec {
               Iterator.single((k, c))
             }
         }
-      val ckpt = s"${graft.streaming.StreamSource.ckptRoot}/bootsoak-${System.nanoTime()}"
+      val ckpt = graft.streaming.StreamSource.checkpointDir(spark, "bootsoak")
       val emitted = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
       def start() = op.toDF("k", "cnt").writeStream
         .outputMode("update")

@@ -50,7 +50,7 @@ class PunctuatedWatermarkSpec extends SparkSpec {
     val q = agg.writeStream.format("memory").queryName(name)
       .outputMode("append")
       .option("checkpointLocation",
-        s"${graft.streaming.StreamSource.ckptRoot}/punct-${System.nanoTime()}")
+        graft.streaming.StreamSource.checkpointDir(spark, "punct"))
       .start()
     try {
       in.addData(10L, 100L, 20L) // batch 1: straggler AFTER the wm-advancing event
